@@ -1382,6 +1382,16 @@ def ngram_jaccard_pairs(
     audit slices — the oracle side of this entry is likewise flagged
     deliberately-quadratic (bench BASELINE_SKIP). On a cluster the
     candidate shuffle distributes; on one box, size the slice.
+
+    CANDIDATE BUDGET: ``candidate_budget`` bounds the prefix join's
+    candidate occurrence rows (Σ bucket² over the prefix tokens),
+    checked before that join runs. An explicit budget, meaning any value
+    other than the default ``JACCARD_CANDIDATE_BUDGET``, forces the
+    guarded prefix-join tier, so the caller's bound is always checked.
+    With the default or ``None`` the dense GEMM tier runs when the
+    corpus fits its caps; it materializes no candidate rows and bounds
+    its own work by ``NGRAM_GEMM_MAX_DOCS`` / ``NGRAM_GEMM_MAX_NNZ``.
+    ``None`` leaves the prefix join unguarded.
     """
     members = docs.select(
         F.col(id_col).alias("_mid"), F.md5(F.col(text_col)).alias("_fp")
@@ -1400,13 +1410,15 @@ def ngram_jaccard_pairs(
     # 241). NULL-text classes are excluded exactly as the join tier
     # excludes them (explode emits their single NULL token, which the
     # dfreq inner join drops). The candidate_budget guard below is a
-    # prefix-JOIN-mass guard and so applies only to that tier; the dense
-    # tier bounds its own work by the nnz/cells/flops caps and emits
-    # only qualifying pairs. Corpora past any cap (real token-diverse
-    # corpora at scale, the r14 saturated heavy profile) fall through to
-    # the unchanged prefix join, which never holds the corpus in memory.
+    # prefix-JOIN-mass guard; an explicit budget skips this tier so the
+    # guard always runs (see CANDIDATE BUDGET above). The dense tier
+    # bounds its own work by the nnz/cells/flops caps and emits only
+    # qualifying pairs. Corpora past any cap (real token-diverse corpora
+    # at scale, the r14 saturated heavy profile) fall through to the
+    # unchanged prefix join, which never holds the corpus in memory.
     rep_pairs = None
-    if docs.count() <= NGRAM_GEMM_MAX_DOCS:
+    dense_allowed = candidate_budget is None or candidate_budget == JACCARD_CANDIDATE_BUDGET
+    if dense_allowed and docs.count() <= NGRAM_GEMM_MAX_DOCS:
         toks_nn = reps.filter(F.col("_rtext").isNotNull()).select(
             "_fp",
             F.array_distinct(char_shingles(F.col("_rtext"), shingle_n)).alias(

@@ -34,11 +34,16 @@ the rewrite by partitioning the table on the merge key's coarse prefix
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -86,20 +91,44 @@ class LakehouseTable:
     def exists(self) -> bool:
         return self.latest_version() >= 0
 
-    def _publish(self, df: DataFrame, operation: str = "WRITE") -> int:
+    def _meta_path(self, v: int) -> str:
+        return os.path.join(self.path, f"v{v}._meta.json")
+
+    def _meta(self, v: int) -> dict | None:
+        """Version ``v``'s commit-log entry, or None for a version an older
+        writer published without one."""
+        try:
+            with open(self._meta_path(v)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
+
+    def _publish(self, df: DataFrame, operation: str = "WRITE", validate=None) -> int:
         """Write df as the next snapshot and flip the pointer (the write
         is to a fresh directory; the single-file pointer write-then-rename
         is the atomic commit, mirroring Delta's log-entry append).
+
+        ``validate``: optional callable run after the snapshot is written
+        and before the flip; raising from it aborts the commit. It lets a
+        check that reads metrics the write itself observed (merge's key
+        uniqueness) run without a query of its own.
 
         Writer-writer conflicts are detected by O_EXCL creation of a
         per-version claim file: two writers that both computed version N
         cannot both create ``vN._claim``, so the loser fails with
         ConcurrentWriteError instead of silently clobbering the winner's
         directory — the same optimistic-concurrency contract as Delta's
-        log append (conflict = recompute and retry). A claim whose
-        version never published (writer crashed mid-write) permanently
-        burns that number; delete the orphaned ``._claim`` file to
-        recover, exactly like clearing a stale lock."""
+        log append (conflict = recompute and retry). A commit that fails
+        in the write, in ``validate`` or in the log entry removes its
+        partial version directory, log entry and claim before re-raising,
+        so the table and the next version number are as they were. Only a
+        writer process that dies mid-write leaves its claim behind; that
+        number stays burned until the orphaned ``._claim`` is deleted,
+        exactly like clearing a stale lock.
+
+        The commit-log entry ``v{N}._meta.json`` records the snapshot's
+        schema, and :meth:`read` uses it instead of inferring the schema
+        from parquet footers."""
         v = self.latest_version() + 1
         os.makedirs(self.path, exist_ok=True)
         claim = os.path.join(self.path, f"v{v}._claim")
@@ -110,20 +139,27 @@ class LakehouseTable:
                 f"{self.name}: version {v} already claimed by another writer; "
                 "re-read the latest snapshot and retry"
             ) from None
-        df.write.mode("overwrite").parquet(self._version_dir(v))
-        # commit-log entry (DESCRIBE HISTORY analog): written before the
-        # pointer flip so a published version always has its metadata.
-        import json
-        import time
-
-        meta = {
-            "version": v,
-            "operation": operation,
-            "timestamp": time.time(),
-            "schema": [f"{name}:{dtype}" for name, dtype in df.dtypes],
-        }
-        with open(os.path.join(self.path, f"v{v}._meta.json"), "w") as fh:
-            json.dump(meta, fh)
+        try:
+            df.write.mode("overwrite").parquet(self._version_dir(v))
+            if validate is not None:
+                validate()
+            # commit-log entry (DESCRIBE HISTORY analog): written before the
+            # pointer flip so a published version always has its metadata.
+            meta = {
+                "version": v,
+                "operation": operation,
+                "timestamp": time.time(),
+                "schema": [f"{name}:{dtype}" for name, dtype in df.dtypes],
+                "schema_json": df.schema.jsonValue(),
+            }
+            with open(self._meta_path(v), "w") as fh:
+                json.dump(meta, fh)
+        except BaseException:
+            shutil.rmtree(self._version_dir(v), ignore_errors=True)
+            for path in (self._meta_path(v), claim):
+                if os.path.exists(path):
+                    os.remove(path)
+            raise
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as fh:
             fh.write(str(v))
@@ -136,18 +172,12 @@ class LakehouseTable:
         removed by vacuum() drop out (their snapshot is gone; history
         follows, which is also Delta's behavior once the log is
         VACUUMed past)."""
-        import json
-
         out = []
         for v in range(self.latest_version(), -1, -1):
-            meta_path = os.path.join(self.path, f"v{v}._meta.json")
             if not os.path.isdir(self._version_dir(v)):
                 continue
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    out.append(json.load(fh))
-            else:  # version published by an older writer without a log
-                out.append({"version": v, "operation": "UNKNOWN"})
+            # a version published by an older writer has no log entry
+            out.append(self._meta(v) or {"version": v, "operation": "UNKNOWN"})
         return out
 
     # --- public API -------------------------------------------------------
@@ -160,7 +190,15 @@ class LakehouseTable:
         return self._publish(df, operation="WRITE")
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read; ``version`` is time travel (Delta versionAsOf)."""
+        """Snapshot read; ``version`` is time travel (Delta versionAsOf).
+
+        The schema comes from the version's commit-log entry
+        (``v{N}._meta.json``, written by :meth:`_publish`), so a read plans
+        without a footer-inference job and time travel returns the schema
+        that version was written with. That file is therefore part of the
+        snapshot, not just history: a version without it (published by an
+        older writer) falls back to inferring the schema from the parquet
+        footers."""
         if delta_available():  # pragma: no cover
             r = self.spark.read.format("delta")
             if version is not None:
@@ -169,7 +207,11 @@ class LakehouseTable:
         v = self.latest_version() if version is None else version
         if v < 0 or not os.path.isdir(self._version_dir(v)):
             raise FileNotFoundError(f"{self.name}: no version {version!r}")
-        return self.spark.read.parquet(self._version_dir(v))
+        reader = self.spark.read
+        schema = (self._meta(v) or {}).get("schema_json")
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(self._version_dir(v))
 
     def _evolve_schemas(
         self, target: DataFrame, source: DataFrame, merge_schema: bool
@@ -235,7 +277,16 @@ class LakehouseTable:
         Source rows must be unique on ``keys`` — Delta MERGE raises
         "multiple source rows matched" in that case, and silently keeping
         both rows (what the naive anti-join union would do) corrupts the
-        key invariant of the table; asserted here before the rewrite."""
+        key invariant of the table. Into an existing table the check rides
+        on the rewrite itself: the rewrite observes the source's row count
+        on its union side and the distinct-key count on its anti-join key
+        side, and the two are compared after the snapshot is written and
+        before the pointer flip. Only when they differ, or when the
+        optimizer pruned an observed branch (an empty source, a prune
+        that matches nothing), does the explicit duplicate query run; it
+        names the key and raises, and the unpublished snapshot is removed
+        (see :meth:`_publish`). The first MERGE into a missing table has
+        no anti-join and runs the explicit query before its write."""
         if delta_available():  # pragma: no cover - no delta in container
             from delta.tables import DeltaTable
 
@@ -249,6 +300,54 @@ class LakehouseTable:
                 .execute()
             )
             return -1
+        if not self.exists():
+            self._check_unique_keys(source, keys)
+            return self._publish(source, operation="MERGE")
+        target = self.read()
+        self._evolve_schemas(target, source, merge_schema)
+        if prune is not None:
+            untouched = target.filter(~F.coalesce(prune, F.lit(False)))
+            candidate = target.filter(F.coalesce(prune, F.lit(False)))
+        else:
+            untouched = None
+            candidate = target
+        # Per-call names: two observations of one name in a plan fail analysis.
+        tag = uuid.uuid4().hex[:12]
+        n_rows = Observation(f"merge_rows_{tag}")
+        n_keys = Observation(f"merge_keys_{tag}")
+        key_side = source.select(*keys).distinct().observe(
+            n_keys, F.count(F.lit(1)).alias("n")
+        )
+        rows = source.observe(n_rows, F.count(F.lit(1)).alias("n"))
+        # Delta UPDATE SET * parity: columns the TABLE has but the source
+        # lacks must survive on matched rows — UPDATE SET * only assigns
+        # the columns the source carries. A bare unionByName would replace
+        # matched rows wholesale, null-stomping evolved-column values the
+        # moment an old-schema writer updates an existing key. Matched
+        # source rows pick the target-only values back up via a key join;
+        # unmatched (inserted) rows find no target row and get the
+        # documented null-fill.
+        target_only = [c for c in target.columns if c not in source.columns]
+        if target_only and merge_schema:
+            rows = rows.join(candidate.select(*keys, *target_only), list(keys), "left")
+        kept = candidate.join(key_side, keys, "left_anti")
+        merged = kept.unionByName(rows, allowMissingColumns=merge_schema)
+        if untouched is not None:
+            merged = untouched.unionByName(merged, allowMissingColumns=merge_schema)
+
+        def keys_unique() -> None:
+            try:
+                if n_rows.get["n"] == n_keys.get["n"]:
+                    return
+            except Py4JJavaError:  # the optimizer pruned an observed branch
+                pass
+            self._check_unique_keys(source, keys)
+
+        return self._publish(merged, operation="MERGE", validate=keys_unique)
+
+    def _check_unique_keys(self, source: DataFrame, keys: list[str]) -> None:
+        """The explicit duplicate-key query: raise naming one key that has
+        more than one source row."""
         dup = (
             source.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("n"))
@@ -262,34 +361,6 @@ class LakehouseTable:
                 f"{ {k: dup[0][k] for k in keys} } — deduplicate the source "
                 "(Delta MERGE rejects this as 'multiple source rows matched')"
             )
-        if not self.exists():
-            return self._publish(source, operation="MERGE")
-        target = self.read()
-        self._evolve_schemas(target, source, merge_schema)
-        if prune is not None:
-            untouched = target.filter(~F.coalesce(prune, F.lit(False)))
-            candidate = target.filter(F.coalesce(prune, F.lit(False)))
-        else:
-            untouched = None
-            candidate = target
-        # Delta UPDATE SET * parity: columns the TABLE has but the source
-        # lacks must survive on matched rows — UPDATE SET * only assigns
-        # the columns the source carries. A bare unionByName would replace
-        # matched rows wholesale, null-stomping evolved-column values the
-        # moment an old-schema writer updates an existing key. Matched
-        # source rows pick the target-only values back up via a key join;
-        # unmatched (inserted) rows find no target row and get the
-        # documented null-fill.
-        target_only = [c for c in target.columns if c not in source.columns]
-        if target_only and merge_schema:
-            source = source.join(
-                candidate.select(*keys, *target_only), list(keys), "left"
-            )
-        kept = candidate.join(source.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(source, allowMissingColumns=merge_schema)
-        if untouched is not None:
-            merged = untouched.unionByName(merged, allowMissingColumns=merge_schema)
-        return self._publish(merged, operation="MERGE")
 
     def change_feed(
         self,
@@ -481,7 +552,7 @@ class LakehouseTable:
         v = self.latest_version() if version is None else version
         zdir = os.path.join(self.path, f"v{v}._zonemap")
         if not os.path.isdir(zdir):
-            df = self.spark.read.parquet(self._version_dir(v))
+            df = self.read(v)
             atomic = [
                 c
                 for c, t in df.dtypes

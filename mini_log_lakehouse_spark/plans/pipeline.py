@@ -103,6 +103,14 @@ def merge_batch_into_lake(
     predicate bounds the copy-on-write rewrite to touched dates, exactly
     how a partitioned Delta MERGE bounds rewritten files.
 
+    The touched dates come from the bronze write itself: it observes
+    ``collect_set(date)`` over the rows it writes, so the raw batch is
+    parsed once. A batch with no parsable line (only blank or malformed
+    lines) writes no bronze rows and leaves the lake version as it was.
+    With the bronze write, the MERGE's single rewrite (which also checks
+    key uniqueness before its pointer flip, see LakehouseTable.merge) is
+    the whole commit; a commit that fails leaves the lake as it was.
+
     Recomputing whole touched days (not deltas) keeps non-mergeable
     measures exact — p95 cannot be combined incrementally, counts could.
 
@@ -119,20 +127,27 @@ def merge_batch_into_lake(
     """
     import uuid
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from mini_log_lakehouse_spark.plans.lakehouse import LakehouseTable
 
-    touched = [r["date"] for r in batch.select("date").distinct().collect()]
-    if not touched:
-        return LakehouseTable(spark, lake_root, "fct_requests_hourly")
     if batch_id is None:
         batch_id = f"adhoc-{uuid.uuid4().hex[:12]}"
-    write_bronze(batch, bronze_root, mode="append", batch_id=batch_id)
+    dates = Observation(f"touched_dates_{uuid.uuid4().hex[:12]}")
+    write_bronze(
+        batch.observe(dates, F.collect_set("date").alias("dates")),
+        bronze_root,
+        mode="append",
+        batch_id=batch_id,
+    )
+    touched = dates.get["dates"]
+    lake = LakehouseTable(spark, lake_root, "fct_requests_hourly")
+    if not touched:
+        return lake
     stg = build_stg_logs(
         read_bronze(spark, bronze_root).filter(F.col("date").isin(touched))
     )
-    lake = LakehouseTable(spark, lake_root, "fct_requests_hourly")
     lake.merge(
         build_fct_requests_hourly(stg),
         keys=["date", "hour", "endpoint"],

@@ -112,12 +112,103 @@ def test_concurrent_writer_claim_raises(spark, lake_env, tmp_path):
 
 def test_merge_rejects_duplicate_source_keys(spark, lake_env):
     """Delta MERGE semantics: multiple source rows for one key is an
-    error, not a silent duplicate insert."""
+    error, not a silent duplicate insert. The check runs after the
+    rewrite and before the pointer flip, so the rejected commit leaves
+    the existing table exactly as it was."""
     bronze, lake_root, _ = lake_env
     lake = init_lake(spark, bronze, lake_root)
+    before, listing = _rows(lake.read()), sorted(os.listdir(lake.path))
     dup_src = lake.read().limit(1).unionAll(lake.read().limit(1))
     with pytest.raises(ValueError, match="multiple source rows"):
         lake.merge(dup_src, keys=["date", "hour", "endpoint"])
+    # a prune that matches nothing drops the observed key side from the
+    # plan; the explicit key check still catches the duplicate
+    with pytest.raises(ValueError, match="multiple source rows"):
+        lake.merge(dup_src, keys=["date", "hour", "endpoint"], prune=F.lit(False))
+    assert lake.latest_version() == 0
+    assert sorted(os.listdir(lake.path)) == listing
+    assert _rows(lake.read()) == before
+
+
+def test_merge_rejects_duplicate_keys_into_new_table(spark, tmp_path):
+    t = LakehouseTable(spark, str(tmp_path), "fresh")
+    dup_src = spark.createDataFrame([(1, "a"), (1, "b")], ["k", "val"])
+    with pytest.raises(ValueError, match="multiple source rows"):
+        t.merge(dup_src, keys=["k"])
+    assert not t.exists()
+
+
+def test_failed_merge_does_not_burn_the_version(spark, lake_env):
+    """A MERGE whose source raises while the snapshot is written removes
+    its partial version directory and claim: the table is unchanged and
+    the next writer publishes the version the failed one had claimed."""
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    before, listing = _rows(lake.read()), sorted(os.listdir(lake.path))
+    poisoned = lake.read().withColumn(
+        "errors", F.raise_error(F.lit("poisoned source")).cast("long")
+    )
+    with pytest.raises(Exception, match="poisoned source"):
+        lake.merge(poisoned, keys=["date", "hour", "endpoint"])
+    assert lake.latest_version() == 0
+    assert sorted(os.listdir(lake.path)) == listing
+    assert lake.write(lake.read()) == 1
+    assert _rows(lake.read()) == before
+
+
+def test_merge_empty_source_without_prune(spark, lake_env):
+    """An empty source lets the optimizer drop the observed anti-join key
+    side; the commit falls back to the explicit key check and publishes
+    the unchanged content."""
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    before = _rows(lake.read())
+    assert lake.merge(lake.read().limit(0), keys=["date", "hour", "endpoint"]) == 1
+    assert _rows(lake.read()) == before
+
+
+def test_increment_of_only_unparsable_lines_is_a_no_op(spark, lake_env, tmp_path):
+    bronze, lake_root, _ = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    bronze_rows = _rows(read_bronze(spark, bronze))
+    junk = tmp_path / "junk.log"
+    junk.write_text("\n   \nnot a log line\n127.0.0.1 - - [garbage\n\n")
+    incremental_update(spark, str(junk), bronze, lake_root)
+    assert lake.latest_version() == 0
+    assert _rows(read_bronze(spark, bronze)) == bronze_rows
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_increment_job_count_contract(spark, lake_env):
+    """One increment commits in the bronze write plus the snapshot
+    publish (5 jobs: the bronze write, then the publish's shuffle stages
+    and its write), and a dashboard read of the new day plans from the
+    commit log without a footer-inference job. A probe added back to
+    either path fails here."""
+    from mini_log_lakehouse_spark.operators import serve
+
+    bronze, lake_root, batch2 = lake_env
+    lake = init_lake(spark, bronze, lake_root)
+    inc = _jobs(spark, "contract-increment",
+                lambda: incremental_update(spark, batch2, bronze, lake_root))
+    assert lake.latest_version() == 1
+    assert inc <= 5, f"incremental_update ran {inc} Spark jobs"
+    assert _jobs(spark, "contract-plan-read", lake.read) == 0
+    row = []
+    reads = _jobs(spark, "contract-read",
+                  lambda: row.extend(serve.kpi_totals(lake.read(), "2025-11-12").collect()))
+    assert reads <= 2, f"a dashboard read ran {reads} Spark jobs"
+    assert row[0]["total_requests"] == 1
 
 
 def test_merge_prune_keeps_untouched_rows_verbatim(spark, lake_env):
@@ -240,9 +331,12 @@ def test_merge_schema_evolution(spark, tmp_path):
     rows = {r["k"]: (r["val"], r["extra"]) for r in t.read().collect()}
     assert rows == {1: ("a", None), 2: ("b2", 20), 3: ("c", 30)}
 
-    # time travel: the pre-evolution version keeps its own schema
+    # time travel: the pre-evolution version keeps its own schema, read
+    # from its commit-log entry, equal to what the footers say
     assert t.read(version=v0).columns == ["k", "val"]
     assert set(t.read(version=v1).columns) == {"k", "val", "extra"}
+    for v in (v0, v1):
+        assert t.read(version=v).schema == spark.read.parquet(t._version_dir(v)).schema
 
     # a second merge with the OLD schema: inserted rows null-fill the new
     # column, but a MATCHED row keeps its evolved-column value (Delta's
@@ -260,6 +354,43 @@ def test_merge_schema_evolution(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="type conflict on 'val'"):
         t.merge(bad, keys=["k"], merge_schema=True)
+
+
+def test_read_schema_from_commit_log_round_trips(spark, tmp_path):
+    """read() takes the schema from v{N}._meta.json: nested, decimal and
+    temporal types and a column name with a space come back exactly as
+    footer inference would give them, and a version with no log entry
+    still reads through inference."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("amount", T.DecimalType(18, 4)),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField("geo", T.StructType([
+            T.StructField("lat", T.DoubleType()),
+            T.StructField("city name", T.StringType()),
+        ])),
+        T.StructField("day", T.DateType()),
+        T.StructField("seen at", T.TimestampType()),
+    ])
+    data = [
+        (1, decimal.Decimal("12.3400"), ["a", "b"], (1.5, "Oslo"),
+         datetime.date(2025, 11, 10), datetime.datetime(2025, 11, 10, 10, 21, 34)),
+        (2, None, [], None, None, None),
+    ]
+    t = LakehouseTable(spark, str(tmp_path), "typed")
+    v = t.write(spark.createDataFrame(data, schema))
+    inferred = spark.read.parquet(t._version_dir(v))
+    assert t.read().schema == inferred.schema
+    assert _rows(t.read()) == _rows(inferred)
+
+    os.remove(os.path.join(t.path, f"v{v}._meta.json"))
+    assert t.read().schema == inferred.schema
+    assert _rows(t.read()) == _rows(inferred)
 
 
 def test_history_describes_operations(spark, tmp_path):

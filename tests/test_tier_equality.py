@@ -127,3 +127,28 @@ def test_sssp_still_raises_when_rounds_insufficient(spark):
     seeds = spark.createDataFrame([(1,)], "user_id long")
     with pytest.raises(AssertionError, match="did not converge"):
         funnels.sssp_weighted(edges, seeds, rounds=3)
+
+
+def test_ngram_jaccard_tiers_identical(spark):
+    # default budget on this small corpus: the dense GEMM tier; an
+    # explicit budget forces the guarded prefix join. Exact duplicates,
+    # near duplicates, zero-shingle texts (shorter than the 5-gram) and
+    # NULL texts are all present.
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = spark.createDataFrame(
+        [
+            (0, base),
+            (1, base),
+            (2, base.replace("river", "ocean")),
+            (3, base.replace("quick", "slow")),
+            (4, "an unrelated text about parquet pruning and predicate pushdown"),
+            (5, "abc"),
+            (6, "abc"),
+            (7, None),
+            (8, None),
+        ],
+        "doc_id long, text string",
+    )
+    dense = _rows(dedup.ngram_jaccard_pairs(docs))
+    joined = _rows(dedup.ngram_jaccard_pairs(docs, candidate_budget=10**12))
+    assert dense == joined and len(dense) > 1
